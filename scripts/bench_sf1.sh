@@ -2,10 +2,12 @@
 # One-command order-of-magnitude scaling datapoint (BASELINE.md "sf1.0
 # scaling" section): amplify sf0.1 10x with graft.ScaleUp (idempotent —
 # the _SCALED marker skips regeneration), then bench the per-family
-# Headline query set against it. Compare the per-query seconds to the
-# same queries' sf0.1 floors in bench_baseline.json: the log10 ratio is
-# the family's scaling exponent (1.0 = linear; super-linear flags an
-# O(n^2)-in-disguise candidate set).
+# Headline query set against it. The log10 ratio of a query's sf1.0
+# seconds to its sf0.1 seconds is the family's scaling exponent (1.0 =
+# linear; super-linear flags an O(n^2)-in-disguise candidate set). Take
+# the sf0.1 side from a SPARK_GRAFT_HEADLINE=1 Bench run of the same
+# code. (Historical: rounds 14-19 compared against the sf0.1 floors in
+# bench_baseline.json, which is no longer updated.)
 #
 # Usage: scripts/bench_sf1.sh  [outputs bench_out.json for the sf1 dir]
 # Env:   SPARK_GRAFT_SF1_DIR (default /tmp/graft_sf1)

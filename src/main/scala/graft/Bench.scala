@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.GraftBridge
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable
 
 /** Driver-run benchmark: every SparkEntry query timed against
   * SPARK_GRAFT_SF_DIR, one JSON line to stdout AND to bench_out.json
@@ -15,380 +18,144 @@ import java.nio.file.{Files, Paths}
   * becomes fiction. One untimed warmup pass amortizes JVM/codegen/classload
   * cost out of the first measured query. Failures are recorded per-query
   * and fail the process: a broken query must never bench as "fast".
+  *
+  * Every timed sample also counts its Spark work ([[Counters]]): jobs,
+  * stages, tasks, task time, shuffle bytes and spill. Wall time on a
+  * shared host drifts by tens of percent over minutes; the job, stage
+  * and byte counts move only when the plan (or an AQE runtime choice)
+  * does, so they say whether a plan changed, and a wall-time claim is
+  * settled by perfbench's alternating A/B (perfbench/README.md).
   */
 object Bench {
 
-  /** bench_trend.json payload: each current per-query min against the best
-    * prior recorded min (bench_baseline.json), so regressions self-report
-    * instead of waiting for a human diff of round artifacts. `ratio_milli`
-    * is an integer per-mille (current·1000 ÷ best, floor) — exact integer
-    * arithmetic, no float-format drift across JVMs.
-    *
-    * NOISE-ROBUST two-run confirmation: a single full run on this host
-    * still flags ~30 byte-identical queries at 1.5× (the hypervisor
-    * bursts outlast even min-of-3 interleaved passes — round 9's trend
-    * list was pure noise), so one run's threshold breach is only a
-    * `suspect`. `regressed` = suspects that were ALSO suspect in the
-    * PREVIOUS independent bench run at the same sf (`priorSuspects`,
-    * read from the last bench_trend.json before it is overwritten).
-    * Noise is ~independent across runs, so the intersection of two
-    * noise sets is empty w.h.p., while a real slowdown breaches both
-    * runs and confirms. Queries with no baseline are listed as new,
-    * never as suspects.
-    *
-    * Evidence is PER QUERY, not per file: a prior suspect that this run
-    * did not measure (a dev SPARK_GRAFT_ONLY subset) is carried forward
-    * in the written `suspects` list instead of being silently cleared —
-    * a standing full-run flag awaits a measurement that refutes it, it
-    * is never washed out by benching a disjoint subset. Only a query
-    * measured in BOTH runs can confirm as `regressed`.
+  /** Spark work of one measured call, summed on the driver over the
+    * stages that completed under its job group. `spillBytes` counts bytes
+    * spilled to disk.
     */
-  /** Suspect-list sentinel for the fleet-median warning — double
-    * underscores keep it outside every legal query name.
-    */
-  private[graft] val FleetSentinel = "__fleet_median__"
-
-  private[graft] def trendJson(cur: Seq[(String, Double)],
-      base: Map[String, Double], priorSuspects: Set[String] = Set.empty,
-      sf: String = "", thresholdMilli: Long = 1500L,
-      fullSurface: Boolean = true): String = {
-    val rows = cur.sortBy(_._1).map { case (name, min) =>
-      base.get(name) match {
-        case Some(b) if b > 0 =>
-          val milli = (min * 1000 / b).toLong
-          (name,
-            "\"" + name + "\":{\"min\":" + min + ",\"best_prior\":" + b +
-              ",\"ratio_milli\":" + milli + "}",
-            Some(milli))
-        case _ =>
-          (name, "\"" + name + "\":{\"min\":" + min + "}", None)
-      }
-    }
-    val measured = cur.map(_._1).toSet
-    // FLEET-RELATIVE threshold: a sustained host-noise window inflates
-    // every query about uniformly (observed twice in round 11: full runs
-    // with median ratio ~1.45 flagged 40 byte-identical queries across
-    // two consecutive runs — the two-run intersection cannot help when
-    // both runs sit inside one noise window). The run's median ratio IS
-    // its environment factor; only a breach beyond median×threshold is
-    // code signal. Applied only to FULL-SURFACE runs with ≥30 baselined
-    // queries: a dev subset's median could be dominated by a genuinely
-    // regressed family, so subsets keep the absolute threshold — and
-    // `fullSurface` is threaded from main (SPARK_GRAFT_ONLY unset), not
-    // inferred from size, so a ≥30-query biased subset can neither
-    // median-normalize itself nor touch the fleet verdict below.
-    val flagging = flag(cur, base, thresholdMilli, fullSurface)
-    val fullRun = flagging.fullRun
-    val medianMilli = flagging.medianMilli
-    val effThreshold = flagging.effThreshold
-    val suspectNames = flagging.suspects.map(_._1).sorted
-    // The fleet-relative threshold's blind spot: a UNIFORM real
-    // regression (a global config / Spark-version change slowing every
-    // query ~1.8×) raises the median and flags nothing. Surface it: a
-    // full run whose MEDIAN itself breaches the absolute threshold is
-    // fleet-suspect, and two consecutive fleet-suspect full runs
-    // confirm as `fleet_regressed` — the same two-run discipline as
-    // per-query suspects, carried between runs via the `fleet_suspect`
-    // field ([[readPriorSuspects]] surfaces it as [[FleetSentinel]] in
-    // the prior set; the suspects array itself stays per-query). A
-    // quiet full run clears the flag; a subset run carries the prior
-    // verdict unchanged (it says nothing about the fleet).
-    val fleetSuspect =
-      if (fullRun) medianMilli >= thresholdMilli
-      else priorSuspects(FleetSentinel)
-    val fleetRegressed = fullRun && medianMilli >= thresholdMilli &&
-      priorSuspects(FleetSentinel)
-    // carry unmeasured queries' standing evidence; a measured query's
-    // suspicion is exactly this run's verdict
-    val persisted =
-      (suspectNames ++ (priorSuspects - FleetSentinel -- measured)).sorted
-    val suspects = persisted.map("\"" + _ + "\"")
-    val regressed = suspectNames.filter(priorSuspects)
-      .map("\"" + _ + "\"")
-    val improved = rows.collect {
-      case (n, _, Some(m)) if m * thresholdMilli <= 1000L * 1000L =>
-        "\"" + n + "\"" // ratio ≤ 1/threshold, the symmetric win
-    }
-    val fresh = rows.collect { case (n, _, None) => "\"" + n + "\"" }
-    s"""{"threshold_milli":$thresholdMilli,"sf":"$sf",""" +
-      s""""median_ratio_milli":$medianMilli,""" +
-      s""""threshold_eff_milli":$effThreshold,""" +
-      s""""fleet_suspect":$fleetSuspect,""" +
-      s""""fleet_regressed":$fleetRegressed,""" +
-      s""""regressed":${regressed.mkString("[", ",", "]")},""" +
-      s""""suspects":${suspects.mkString("[", ",", "]")},""" +
-      s""""improved":${improved.mkString("[", ",", "]")},""" +
-      s""""new":${fresh.mkString("[", ",", "]")},""" +
-      s""""queries":${rows.map(_._2).mkString("{", ",", "}")}}"""
+  private[graft] final case class Work(jobs: Int = 0, stages: Int = 0,
+      tasks: Long = 0, taskMs: Long = 0, shuffleReadBytes: Long = 0,
+      shuffleWriteBytes: Long = 0, spillBytes: Long = 0) {
+    def json: String =
+      s""""jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_ms":$taskMs,""" +
+        s""""shuffle_read_bytes":$shuffleReadBytes,""" +
+        s""""shuffle_write_bytes":$shuffleWriteBytes,""" +
+        s""""spill_bytes":$spillBytes"""
   }
 
-  private[graft] def effectiveThreshold(thresholdMilli: Long,
-      medianMilli: Long): Long =
-    math.max(thresholdMilli,
-      thresholdMilli * math.max(medianMilli, 1000L) / 1000L)
-
-  /** ONE home for the flagging pipeline (ratio → fleet median → effective
-    * threshold → suspects): trendJson's artifact fields and main's
-    * auto-adjudication target set both read THIS, so they cannot drift —
-    * a probe that adjudicates a different suspect set than the trend
-    * reports would defeat its purpose.
+  /** Per-query Spark counters. [[measure]] runs a call under its own job
+    * group and returns once this listener has seen every job the group
+    * started end, so the [[Work]] it returns is complete. Threads the
+    * query starts inherit the group (SparkContext local properties), and
+    * Spark's own broadcast and subquery threads carry it over explicitly.
     */
-  private[graft] final case class Flagging(fullRun: Boolean,
-      medianMilli: Long, effThreshold: Long,
-      suspects: Seq[(String, Long)])
+  private[graft] final class Counters(sc: SparkContext) extends SparkListener {
+    private val TimeoutMs = 60000L
+    private var group: String = null // the open measurement's, or null
+    private var work = Work()
+    private val running = mutable.Set.empty[Int]
+    private val pendingStages = mutable.Set.empty[Int]
 
-  private[graft] def flag(cur: Seq[(String, Double)],
-      base: Map[String, Double], thresholdMilli: Long = 1500L,
-      fullSurface: Boolean = true): Flagging = {
-    val ratios = cur.flatMap { case (n, v) =>
-      base.get(n).filter(_ > 0).map(b => n -> (v * 1000 / b).toLong)
+    sc.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (group != null && Option(e.properties)
+          .exists(_.getProperty("spark.jobGroup.id") == group)) {
+        work = work.copy(jobs = work.jobs + 1)
+        running += e.jobId
+        pendingStages ++= e.stageIds
+      }
     }
-    val fullRun = fullSurface && ratios.size >= 30
-    val medianMilli =
-      if (fullRun) { val s = ratios.map(_._2).sorted; s(s.size / 2) }
-      else 1000L
-    val eff = effectiveThreshold(thresholdMilli, medianMilli)
-    Flagging(fullRun, medianMilli, eff,
-      ratios.filter(_._2 >= eff).sortBy(-_._2))
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      if (running.remove(e.jobId)) notifyAll()
+    }
+
+    // a stage shared by several jobs of the group completes (and counts)
+    // once; a stage whose shuffle output a job reuses is skipped and
+    // never completes
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        val si = e.stageInfo
+        if (pendingStages.remove(si.stageId)) {
+          val m = Option(si.taskMetrics)
+          work = work.copy(
+            stages = work.stages + 1,
+            tasks = work.tasks + si.numTasks,
+            taskMs = work.taskMs + m.fold(0L)(_.executorRunTime),
+            shuffleReadBytes = work.shuffleReadBytes +
+              m.fold(0L)(_.shuffleReadMetrics.totalBytesRead),
+            shuffleWriteBytes = work.shuffleWriteBytes +
+              m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
+            spillBytes = work.spillBytes + m.fold(0L)(_.diskBytesSpilled))
+        }
+      }
+
+    /** Runs `body` under job group `jobGroup` and returns its Work once
+      * every event the body posted has reached this listener (a bus
+      * drain, not a sleep) and every job of the group has ended.
+      */
+    def measure(jobGroup: String)(body: => Unit): Work = {
+      synchronized {
+        group = jobGroup; work = Work(); running.clear(); pendingStages.clear()
+      }
+      sc.setJobGroup(jobGroup, jobGroup)
+      try body
+      finally {
+        sc.clearJobGroup()
+        GraftBridge.drainListenerBus(sc, TimeoutMs)
+        synchronized {
+          val deadline = System.currentTimeMillis() + TimeoutMs
+          while (running.nonEmpty && System.currentTimeMillis() < deadline)
+            wait(math.max(1L, deadline - System.currentTimeMillis()))
+          group = null
+        }
+      }
+      synchronized {
+        require(running.isEmpty, s"$jobGroup: jobs ${running.mkString(",")} " +
+          s"did not end within ${TimeoutMs / 1000} s")
+        work
+      }
+    }
   }
 
-  /** This run's newly-flagged suspects, worst first — [[flag]]'s
-    * suspect list, the set main auto-adjudicates (r15 verdict task 4).
-    */
-  private[graft] def freshSuspects(cur: Seq[(String, Double)],
-      base: Map[String, Double], thresholdMilli: Long = 1500L,
-      fullSurface: Boolean = true): Seq[(String, Long)] =
-    flag(cur, base, thresholdMilli, fullSurface).suspects
-
-  /** The probe.sh adjudication rule as a pure function (spec-pinned):
-    * the window's environment factor is the median control
-    * ratio-to-floor; a suspect whose fresh re-measured ratio divided by
-    * that factor still breaches 2.0× is CONFIRMed as code, anything
-    * less is the window. Returns the probe artifact JSON.
-    *
-    * Two r17 hardenings (r16 verdict task 2 + ADVICE):
-    *  - The divisor is clamped at 1.0 — env normalization exists to
-    *    excuse a SLOW window, never to amplify: unclamped, controls
-    *    running 0.85× their floors would convert a raw 1.8× suspect
-    *    into a 2.12× CONFIRM that never breached 2× raw.
-    *  - A poisoned floor cannot convert a quiet window into a false
-    *    code ruling: r16's freak run admitted ref_crop_video /
-    *    web_extract_text floors at 0.60×/0.42× their honest values, and
-    *    floor-ratio-only adjudication would have CONFIRMed the next
-    *    normal measurement in any env≈1.0 window. CONFIRM therefore
-    *    requires BOTH adj ≥ 2.0 against the floor AND fresh ≥ 1.5× the
-    *    query's trailing-window MEDIAN (`trailingMedians`, from
-    *    bench_history.json) — a freak min moves the floor but not the
-    *    median, so the second test refuses the phantom. A query with no
-    *    median history (new this window) falls back to the floor rule
-    *    alone.
-    */
-  private[graft] def adjudicationJson(
-      suspects: Seq[(String, Double, Double)], // (name, freshMin, floor)
-      controlRatios: Seq[Double], sf: String,
-      probeErrors: Seq[String] = Nil,
-      trailingMedians: Map[String, Double] = Map.empty): String = {
-    val sortedCtl = controlRatios.sorted
-    val env =
-      if (sortedCtl.isEmpty) 1.0 else sortedCtl(sortedCtl.size / 2)
-    // the CONFIRM rule is evaluated ONCE per suspect; the top-level
-    // verdict counts these same rows, so the two can never disagree
-    val judged = suspects.map { case (n, fresh, floor) =>
-      val raw = if (floor > 0) fresh / floor else 0.0
-      val adj = raw / math.max(env, 1.0)
-      val medRatio = trailingMedians.get(n).filter(_ > 0).map(fresh / _)
-      val confirm = adj >= 2.0 && medRatio.forall(_ >= 1.5)
-      (n, fresh, floor, raw, adj, medRatio,
-        if (confirm) "CONFIRM" else "clear")
-    }
-    val rows = judged.map {
-      case (n, fresh, floor, raw, adj, medRatio, verdict) =>
-        "\"" + n + "\":{\"fresh_min\":" + fresh + ",\"floor\":" + floor +
-          ",\"raw_milli\":" + (raw * 1000).toLong +
-          ",\"adj_milli\":" + (adj * 1000).toLong +
-          medRatio.fold("")(m =>
-            ",\"ratio_to_trailing_median_milli\":" + (m * 1000).toLong) +
-          ",\"verdict\":\"" + verdict + "\"}"
-    }
-    val confirmed = judged.count(_._7 == "CONFIRM")
-    val errs = probeErrors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // a probe with failures cannot claim all-clear: the failed query's
-    // verdict is UNKNOWN, not clear
-    val verdict =
-      if (confirmed > 0) "CONFIRMED"
-      else if (probeErrors.nonEmpty) "probe-errors"
-      else "all-clear"
-    s"""{"sf":"$sf","env_factor_milli":${(env * 1000).toLong},""" +
-      s""""n_controls":${controlRatios.size},""" +
-      s""""probe_errors":$errs,""" +
-      s""""verdict":"$verdict",""" +
-      s""""suspects":${rows.mkString("{", ",", "}")}}"""
-  }
-
-  /** Previous run's suspect set from the bench_trend.json about to be
-    * overwritten — the other half of the two-run confirmation. Prior
-    * evidence only counts when the previous run recorded the SAME sf
-    * (a dev subset run at another scale says nothing about this one);
-    * a file with NO sf key — a legacy format, or hand-edited — is no
-    * evidence at all rather than evidence about every sf.
-    */
-  private[graft] def readPriorSuspects(path: java.nio.file.Path,
-      sf: String): Set[String] =
-    if (!Files.exists(path)) Set.empty
-    else {
-      val text = Files.readString(path)
-      val sfRe = "\"sf\"\\s*:\\s*\"([^\"]*)\"".r
-      val priorSf = sfRe.findFirstMatchIn(text).map(_.group(1))
-      if (!priorSf.contains(sf)) Set.empty
-      else {
-        val re = "\"suspects\"\\s*:\\s*\\[([^\\]]*)\\]".r
-        val perQuery = re.findFirstMatchIn(text).map(m =>
-          // same [^"]* name shape the sf parse uses — any legal query
-          // name round-trips, none silently drop
-          "\"([^\"]*)\"".r.findAllMatchIn(m.group(1))
-            .map(_.group(1)).toSet).getOrElse(Set.empty[String])
-        // the standing fleet-median verdict rides along as a sentinel
-        // (double underscores keep it outside every legal query name)
-        if (text.contains("\"fleet_suspect\":true")) perQuery + FleetSentinel
-        else perQuery
-      }
-    }
-
-  /** bench_baseline.json → per-query best prior min. Hand-rolled parse of
-    * the known flat shape ("name":number pairs under "queries") — no JSON
-    * library on the unmanaged classpath.
-    */
-  private[graft] def readBaseline(path: java.nio.file.Path): Map[String, Double] =
-    if (!Files.exists(path)) Map.empty
-    else {
-      val text = Files.readString(path)
-      val at = text.indexOf("\"queries\"")
-      if (at < 0) Map.empty // malformed baseline = no priors, not a crash
-      else {
-        val pair = "\"([A-Za-z0-9_]+)\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r
-        pair.findAllMatchIn(text.substring(at))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    }
-
-  /** bench_history.json → per-query samples across the trailing window's
-    * FULL runs. Same hand-rolled parse discipline as [[readBaseline]]:
-    * scan name:number pairs, but only AFTER the "runs" key — the file
-    * may also carry probe-provenance samples (fold_baseline.py
-    * --fold-probe), which its writer places BEFORE "runs" precisely so
-    * a probe's one-window re-measurements never leak into the medians
-    * they exist to cross-check. Metadata keys riding in the scanned
-    * region (each run wrapper's "n" count; a hand-edited file could
-    * also place "k" after "runs") are excluded structurally: every
-    * query name is `family_name`-shaped, so only names containing an
-    * underscore are samples (spec-pinned against the live surface).
-    */
-  private[graft] def readHistory(
-      path: java.nio.file.Path): Map[String, Seq[Double]] =
-    if (!Files.exists(path)) Map.empty
-    else {
-      val text = Files.readString(path)
-      val at = text.indexOf("\"runs\"")
-      if (at < 0) Map.empty
-      else {
-        val pair = "\"([A-Za-z0-9_]+)\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r
-        pair.findAllMatchIn(text.substring(at)).toSeq
-          .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter(_._1.contains('_'))
-          .groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2) }
-      }
-    }
-
-  /** Sorted-midpoint median (even sizes interpolate) — ONE home, used
-    * by both [[trailingMedians]] and main's volatility top-up.
-    */
+  /** Sorted-midpoint median (even sizes interpolate). */
   private[graft] def medianOf(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2)
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
-  /** Per-query MEDIAN over the trailing window — the poisoned-floor
-    * cross-check [[adjudicationJson]] confirms against: a single freak
-    * sample can move a min-folded floor but never the window median.
-    */
-  private[graft] def trailingMedians(
-      path: java.nio.file.Path): Map[String, Double] =
-    readHistory(path).map { case (n, xs) => n -> medianOf(xs) }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     // Shuffle files on tmpfs when available: bench data is tiny (≤ a few
     // hundred MB of shuffle) but the host disk has multi-second latency
     // spikes that otherwise leak into per-query wall times.
     val shm = new java.io.File("/dev/shm")
-    val localDir =
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-bench")
-      else None
-    // r19: the r18 64 KB AQE coalescing floor is REVERTED to Spark's
-    // default 1 MB. r18 lowered minPartitionSize on subset evidence
-    // (sim_ivfpq/ev_sessionize-class CPU-dense reducers kept width),
-    // but the FULL-FLEET A/B this round (identical code, env-var-only
-    // flip, 3 interleaved passes × 250 queries, min per query) measured
-    // the 64 KB floor as a broad tax: total 213.8 s at 64k vs 180.6 s
-    // at 1m (geomean 0.844, only 4/250 queries >1.2× worse at 1m, and
-    // even most of r18's targeted winners ran faster at 1m —
-    // dd_lsh_sweep 0.68×, sim_mmr 0.69×). The tiny-task overhead the
-    // floor creates on every few-MB shuffle outweighs the width it buys
-    // the handful of CPU-dense stages. The knob stays parameterized
-    // (SPARK_GRAFT_MIN_SPLIT) for cluster profiles; the default is
-    // Spark's own.
-    val minPart = sys.env.getOrElse("SPARK_GRAFT_MIN_SPLIT", "1m")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        minPart)
-      .config("spark.ui.enabled", "false")
-    val spark = localDir.fold(builder)(d => builder.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietAllowlistedWarnings()
+    val spark = Sessions.getOrCreate(
+      shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE"),
+      localDir =
+        if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-bench")
+        else None)
+    val counters = new Counters(spark.sparkContext)
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    // SPARK_GRAFT_OUT_PREFIX namespaces the output artifacts (e.g. the
-    // sf1.0 scaling mode writes sf1_bench_out.json) so an off-scale run
-    // never clobbers the sf0.1 trend chain — bench_trend.json carries
-    // the STANDING two-run suspect evidence, which an overwrite at
-    // another sf would silently wipe.
+    // SPARK_GRAFT_OUT_PREFIX namespaces the output artifact (the sf1.0
+    // scaling mode writes sf1_bench_out.json) so an off-scale run never
+    // clobbers the sf0.1 bench_out.json.
     val prefix = sys.env.getOrElse("SPARK_GRAFT_OUT_PREFIX", "")
     val outPath = Paths.get(s"${prefix}bench_out.json")
-    val trendPath = Paths.get(s"${prefix}bench_trend.json")
-    // prior suspects feed the two-run regression confirmation — read
-    // BEFORE the delete below discards the previous run's evidence
-    val priorSuspects = readPriorSuspects(trendPath, sfDir)
     // a crash below must never leave a previous run's results parseable
-    // (nor may a run that SKIPS the probe leave the previous run's
-    // adjudication verdict looking current)
     Files.deleteIfExists(outPath)
-    Files.deleteIfExists(trendPath)
-    Files.deleteIfExists(Paths.get(s"${prefix}probe_adjudication.json"))
 
-    // dev affordance: SPARK_GRAFT_ONLY=q1_agg,dd_jaccard benches a subset.
-    // Full-surface status is decided HERE (the env var's absence), not
-    // re-inferred downstream from a ≥30-query heuristic a biased subset
-    // could satisfy — only a genuinely full run may median-normalize or
-    // confirm/clear the standing fleet verdict in trendJson.
+    // dev affordance: SPARK_GRAFT_ONLY=q1_agg,dd_jaccard benches a subset;
     // SPARK_GRAFT_HEADLINE=1 benches the fixed per-family Headline set
-    // (the sf1.0 scaling mode, scripts/bench_sf1.sh) — a subset, so it
-    // never median-normalizes or touches the fleet verdict either.
+    // (the sf1.0 scaling mode, scripts/bench_sf1.sh).
     val only = sys.env.get("SPARK_GRAFT_ONLY").orElse(
       if (sys.env.contains("SPARK_GRAFT_HEADLINE"))
         Some(Headline.mkString(",")) else None)
-    val fullSurface = only.isEmpty
     val names = only match {
       case Some(list) => list.split(',').map(_.trim).filter(_.nonEmpty).toSeq
       case None       => SparkEntry.queries.keys.toSeq.sorted
@@ -399,80 +166,49 @@ object Bench {
     names.foreach(n => try materialize(n) catch { case _: Throwable => () })
 
     var failed = List.empty[String]
-    def once(name: String): Double = {
-      val t0 = System.nanoTime()
-      try materialize(name)
-      catch {
-        case e: Throwable =>
-          if (!failed.contains(name)) failed ::= name
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
+    // one timed sample: the query's wall seconds (the counters' bus drain
+    // runs outside the clock) and its Spark work
+    def once(name: String, pass: Int): (Double, Work) = {
+      var seconds = 0.0
+      val work =
+        try counters.measure(s"bench:$name:$pass") {
+          val t0 = System.nanoTime()
+          try materialize(name)
+          finally seconds = (System.nanoTime() - t0) / 1e9
+        }
+        catch {
+          case e: Throwable =>
+            if (!failed.contains(name)) failed ::= name
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            Work()
+        }
+      (seconds, work)
     }
     // N FULL timed passes, interleaved, min per query: this host shows
     // multi-second wall-time bursts uncorrelated with the engine (idle CPU,
     // zero full GCs during them — hypervisor neighbors), and a burst
-    // outlasts back-to-back samples of one query. Rounds 5↔6 measured ±5×
-    // per-query swings on byte-identical code, so a single sample is
-    // unfalsifiable. Interleaving the passes puts samples ~30s apart, so
-    // the min measures the engine, not the neighbor; the emitted
-    // median/spread per query lets a reader tell a real regression (tight
-    // spread, min moved) from noise (spread ≫ min). Failures still fail
-    // the run.
+    // outlasts back-to-back samples of one query. Interleaving the passes
+    // puts samples ~30s apart, so the min measures the engine, not the
+    // neighbor; the emitted median/spread per query lets a reader tell a
+    // real regression (tight spread, min moved) from noise (spread ≫ min).
+    // Every query gets exactly `passes` samples. Failures still fail the
+    // run.
     val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
       .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(3).max(1)
-    val samples: Map[String, Seq[Double]] = {
-      val perPass = (1 to passes).map(_ => names.map(n => n -> once(n)).toMap)
-      val base = names.map(n => n -> perPass.map(_(n)): (String, Seq[Double]))
-        .toMap
-      // Volatility top-up (r14 verdict task 1): sub-second CPU-tight
-      // queries (txt_bpe_merges, mm_audio_neardup were the round-14
-      // breachers) are the ones whose floor depends on core warmth, and
-      // in a cold window all `passes` samples can land warm-skewed ≥2×
-      // over a floor set in a hot window. For queries that are BOTH
-      // cheap (min < 1.2 s — extra samples cost ~nothing) and visibly
-      // volatile this run (spread > 50% of min), take 2 more
-      // interleaved passes so their reported min is min-of-(passes+2)
-      // — enough draws that at least one lands warm in any window. The
-      // condition bounds the top-up's wall cost to the noisy cheap set;
-      // a stable or expensive query never re-runs. A cheap query whose
-      // min sits ≥1.5× its trailing floor also qualifies even with a
-      // tight spread — that's the "every sample this window landed
-      // warm" shape the spread test can't see, and exactly what the
-      // driver's gate would flag.
-      val extraPasses = sys.env.get("SPARK_GRAFT_BENCH_EXTRA")
-        .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(2).max(0)
-      // floors are sf0.1 numbers: in an off-scale run (prefixed output,
-      // e.g. the sf1.0 scaling bench) EVERY query sits above them, and
-      // the floor arm would top-up the whole cheap fleet — compare only
-      // when this run feeds the same trend chain the floors came from
-      val floors =
-        if (prefix.isEmpty) readBaseline(Paths.get("bench_baseline.json"))
-        else Map.empty[String, Double]
-      val volatile = names.filter { n =>
-        val xs = base(n)
-        !failed.contains(n) && xs.min < 1.2 &&
-          ((xs.max - xs.min) > 0.5 * xs.min ||
-            floors.get(n).exists(f => f > 0 && xs.min >= 1.5 * f))
-      }
-      if (extraPasses == 0 || volatile.isEmpty) base
-      else {
-        val extra = (1 to extraPasses)
-          .map(_ => volatile.map(n => n -> once(n)).toMap)
-        base ++ volatile.map(n => n -> (base(n) ++ extra.map(_(n))))
-      }
-    }
-    val results = names.map(n => n -> samples(n).min)
-    val ok = results.filterNot { case (n, _) => failed.contains(n) }
+    val perPass = (1 to passes).map(p => names.map(n => n -> once(n, p)).toMap)
+    val samples = names.map(n => n -> perPass.map(_(n))).toMap
+    val ok = names.filterNot(failed.contains)
+      .map(n => n -> samples(n).map(_._1).min)
     val qs = ok.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    // per-query dispersion: min is what the driver grades; median and
-    // spread (= max-min, the burst amplitude this run) make the gate
-    // falsifiable — a regression is a moved min with a small spread.
+    // per-query dispersion and cost: min is the graded number; median
+    // and spread (= max-min, the burst amplitude this run) make the gate
+    // falsifiable, and the counters are the Spark work of the min sample.
     val vars = ok.map { case (k, _) =>
-      val xs = samples(k)
+      val xs = samples(k).map(_._1)
       "\"" + k + "\":{\"min\":" + xs.min + ",\"median\":" + medianOf(xs) +
-        ",\"spread\":" + (xs.max - xs.min) + "}"
+        ",\"spread\":" + (xs.max - xs.min) + ",\"samples\":" + xs.size +
+        "," + samples(k).minBy(_._1)._2.json + "}"
     }.mkString("{", ",", "}")
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = ok.map(_._2).sum
@@ -481,62 +217,6 @@ object Bench {
         s""""variance":$vars,"passes":$passes,""" +
         s""""errors":$errs,"sf":"$sfDir"}"""
     Files.writeString(outPath, json + "\n")
-    val baselineNow = readBaseline(Paths.get("bench_baseline.json"))
-    Files.writeString(trendPath,
-      trendJson(ok, baselineNow, priorSuspects, sfDir,
-        fullSurface = fullSurface) + "\n")
-    // ---- suspect auto-adjudication (r15 verdict task 4) -------------------
-    // A full run that flags suspects used to leave adjudication to a
-    // by-hand probe.sh next session; the closing artifact then carried
-    // unexplained ≥2× flags. Now the run adjudicates itself: re-measure
-    // the flagged queries INTERLEAVED with stable controls in this same
-    // JVM (a fresh sample ~minutes after the main passes — a transient
-    // burst that inflated the main sample has usually moved on), divide
-    // out the window's environment factor (median control
-    // ratio-to-floor), and write the verdict beside the trend. Bounded:
-    // ≤8 worst suspects, 6 controls, 2 passes. Only for the real sf0.1
-    // chain (prefix empty) on a full surface; SPARK_GRAFT_PROBE=0 skips.
-    val probeOn = fullSurface && prefix.isEmpty && failed.isEmpty &&
-      !sys.env.get("SPARK_GRAFT_PROBE").contains("0")
-    if (probeOn) {
-      val fresh = freshSuspects(ok, baselineNow, fullSurface = fullSurface)
-      if (fresh.nonEmpty) {
-        val targets = fresh.take(8).map(_._1)
-        val targetSet = targets.toSet
-        val controls = stratifiedControls(baselineNow.toSeq
-          .filter { case (n, v) =>
-            !targetSet(n) && v >= 0.2 && v <= 1.0 &&
-              SparkEntry.queries.contains(n)
-          }
-          .map(_._1))
-        // a probe-time failure must never masquerade as a timing: a
-        // fast-throwing CONTROL would drag the env factor down (false
-        // CONFIRMs), a throwing TARGET would be timed at its
-        // time-to-throw (false clear). Failed queries drop out of the
-        // env estimate / verdict and are listed in the artifact.
-        var probeFailed = Set.empty[String]
-        def time(name: String): Double = {
-          val t0 = System.nanoTime()
-          try materialize(name)
-          catch { case _: Throwable => probeFailed += name }
-          (System.nanoTime() - t0) / 1e9
-        }
-        val order = targets ++ controls
-        val probeSamples = (1 to 2).map(_ => order.map(n => n -> time(n)))
-          .flatten.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).min }
-        val ctlRatios = controls.filterNot(probeFailed).flatMap(c =>
-          baselineNow.get(c).filter(_ > 0).map(f => probeSamples(c) / f))
-        val probeJson = adjudicationJson(
-          targets.filterNot(probeFailed)
-            .map(t => (t, probeSamples(t), baselineNow.getOrElse(t, 0.0))),
-          ctlRatios, sfDir,
-          probeErrors = probeFailed.toSeq.sorted,
-          trailingMedians = trailingMedians(Paths.get("bench_history.json")))
-        Files.writeString(Paths.get(s"${prefix}probe_adjudication.json"),
-          probeJson + "\n")
-        System.err.println(s"[bench] probe adjudication: $probeJson")
-      } else Files.deleteIfExists(Paths.get(s"${prefix}probe_adjudication.json"))
-    }
     // The driver captures only the TAIL (~2 KB) of stdout: the full
     // per-query line above is ~25 KB, so its head — and with it the
     // {"metric": prefix the parser keys on — fell outside the window in
@@ -549,23 +229,6 @@ object Bench {
       s"${prefix}bench_out.json"))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
-  }
-
-  /** Probe-control picker (spec-pinned): up to `n` controls from the
-    * candidate pool, stratified by family prefix (r16 verdict nit +
-    * ADVICE) — round-robin one query per family before taking a second
-    * from any. The old `cands.size / 6` stride degenerates to 1 for
-    * pools of 7-11 (first 6 alphabetically, likely one family) and
-    * biases the env factor toward that family's local noise.
-    * Deterministic: families and their members are both visited in
-    * sorted order.
-    */
-  private[graft] def stratifiedControls(cands: Seq[String],
-      n: Int = 6): Seq[String] = {
-    val byFam = cands.sorted.groupBy(_.takeWhile(_ != '_'))
-      .toSeq.sortBy(_._1).map(_._2)
-    val deepest = byFam.map(_.size).maxOption.getOrElse(0)
-    (0 until deepest).flatMap(i => byFam.flatMap(_.lift(i))).take(n)
   }
 
   /** Representative per-family subset for the compact stdout line: the

@@ -192,27 +192,9 @@ object Main {
     val outDir = cli.outDir.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_out").toString)
     // spark-submit parity (bin/run-pipeline.sh, the reference's
-    // run.preprocess.sh local/cloud split): a submitted run arrives with
-    // spark.master and its own shuffle sizing in the system properties —
-    // pinning local[*] here would silently hijack a cluster submission
-    // back onto the driver, so master/partitions are DEFAULTS, applied
-    // only when no submitter provided them.
-    val submitted = sys.props.contains("spark.master")
-    val builder0 = SparkSession.builder()
-    val builder =
-      if (submitted) builder0
-      else builder0
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-        .config("spark.ui.enabled", "false") // local dev; keep UI on-cluster
-    val spark = builder
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Logs.quietAllowlistedWarnings()
+    // run.preprocess.sh local/cloud split): Sessions leaves master and
+    // shuffle sizing to a submitter that provided them
+    val spark = Sessions.getOrCreate()
     // --input_dir points at real files (distributed glob, the reference's
     // --input_dir); otherwise the fixture listing is synthesized from sfDir
     val (listing, decoder) = cli.inputDir match {

@@ -3,11 +3,12 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Three-forwarder bridge into the `private[sql]` seams a whole-operator
-  * extension needs: constructing a DataFrame from a custom LogicalPlan
-  * (`Dataset.ofRows`), a Column from a resolved Attribute
-  * (`ExpressionUtils.column`), and re-claiming a checkpointed frame's
-  * hash partitioning ([[reclaimHashPartitioning]]). The standard
+/** Four-forwarder bridge into the `private[sql]`/`private[spark]` seams a
+  * whole-operator extension needs: constructing a DataFrame from a custom
+  * LogicalPlan (`Dataset.ofRows`), a Column from a resolved Attribute
+  * (`ExpressionUtils.column`), re-claiming a checkpointed frame's
+  * hash partitioning ([[reclaimHashPartitioning]]), and draining the
+  * listener bus ([[drainListenerBus]], Bench's counters). The standard
   * OSS-extension technique (Delta Lake, GraphFrames, Iceberg all ship
   * the same shim) — kept to exactly these forwarders so the engine's
   * dependence on non-public surface is auditable in one file.
@@ -63,4 +64,13 @@ object GraftBridge {
       case _ => df
     }
   }
+
+  /** Blocks until every listener has processed every event posted so far
+    * (`LiveListenerBus.waitUntilEmpty`, the barrier Spark's own suites
+    * use), so a listener's view of an action that has returned is
+    * complete. Throws a TimeoutException after `timeoutMs`.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext,
+      timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }
