@@ -44,7 +44,7 @@ object Components {
 
   /** pairs(doc_a, doc_b) → (doc_id, cluster_id) for every doc in a pair.
     *
-    * The edge list and each round's labels are MATERIALIZED
+    * The edge list and each round's labels but the last are MATERIALIZED
     * (`localCheckpoint`) before iterating: without lineage truncation,
     * round r's logical plan embeds round r-1's twice (labels ∪ edges⋈labels)
     * — 2^rounds copies of the upstream candidate-generation DAG — and
@@ -52,11 +52,12 @@ object Components {
     * (measured: 5→17 s of pure driver time at rounds=4). Iterative graph
     * algorithms on Spark always checkpoint per round; on a real cluster
     * use `spark.sparkContext.setCheckpointDir` + `.checkpoint()` for
-    * executor-loss tolerance — local[] has no executor loss.
+    * executor-loss tolerance — local[] has no executor loss. The last
+    * round's labels come back unmaterialized; a caller that reads them
+    * more than once materializes them itself.
     */
   def label(pairs: DataFrame, rounds: Int,
-      inputMaterialized: Boolean = false,
-      materializeResult: Boolean = true): DataFrame = {
+      inputMaterialized: Boolean = false): DataFrame = {
     // Materialize the pair list BEFORE symmetrizing: the union references
     // `pairs` twice, and without truncation the (expensive) candidate-
     // generation DAG upstream would execute once per reference.
@@ -65,10 +66,6 @@ object Components {
     // (the er_report family) — re-running a filter over cached blocks
     // twice is cheaper than another checkpoint job (r19; at sf0.1 the
     // loop's wall cost is job-count-dominated, ~0.1 s fixed per job).
-    // `materializeResult = false` likewise skips the LAST round's
-    // checkpoint for callers that consume the labels exactly once (the
-    // final round's plan then reads the round-(n−1) checkpoint twice —
-    // two cached-block scans, no recomputation of earlier rounds).
     val p = if (inputMaterialized) pairs else pairs.materialize()
     // symmetric edge list + self-loops (keeps isolated-after-dedup rows).
     // SIZE-ADAPTIVE pre-partitioning (r16 A/B, PLAN_AUDIT.md): claiming
@@ -97,9 +94,11 @@ object Components {
       // per-round truncation: the r18 A/B re-measured the single-plan
       // alternative (AQE stage reuse does NOT dedupe the repeated round
       // subtrees) at 1.4-2.9× WORSE on the ≥10k-pair er graphs — the
-      // between-rounds checkpoint stays; only the final round's is
-      // caller-optional (see scaladoc)
-      if (r < rounds || materializeResult) labels = labels.materialize()
+      // between-rounds checkpoint stays. The final round's is the
+      // caller's: most consume the labels once (the plan then reads the
+      // round-(n−1) checkpoint twice — two cached-block scans, no
+      // recomputation), and a caller that reuses them materializes
+      if (r < rounds) labels = labels.materialize()
     }
     labels
   }

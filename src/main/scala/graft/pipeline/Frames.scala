@@ -49,6 +49,149 @@ object FrameDecoder {
   }
 }
 
+/** One video stream as a container parser hands it to [[FrameSampler]]:
+  * the frame size, the native frame count, the media end
+  * (`endUnits / unitsPerSec` seconds, `unitsPerSec` > 0), the
+  * container's own tick→frame arithmetic (`covering`: tick time in ms →
+  * native frame index) and a per-index pixel converter — `None` when the
+  * codec has no pure-JVM path and pixels must come from the fallback
+  * decoder.
+  */
+private[pipeline] final case class ParsedVideo(height: Int, width: Int,
+    frames: Int, endUnits: BigInt, unitsPerSec: Long,
+    covering: Long => Long, pixels: Option[Int => Array[Float]])
+
+/** A decoder that is only a container parser: [[FrameSampler]] turns the
+  * parsed stream into frames. `fallback` decodes the pixels of a codec
+  * the parser has no pure-JVM path for.
+  */
+abstract class ContainerFrameDecoder private[pipeline] (
+    parse: (String, Array[Byte]) => ParsedVideo,
+    fallback: FrameDecoder = null) extends FrameDecoder {
+
+  override def decode(filename: String, content: Array[Byte],
+      sampleRateMs: Long): Iterator[DecodedFrame] =
+    FrameSampler.sample(filename, content, sampleRateMs, withPixels = true,
+      fallback)(parse)
+
+  override def decodeMeta(filename: String, content: Array[Byte],
+      sampleRateMs: Long): Iterator[DecodedFrame] =
+    FrameSampler.sample(filename, content, sampleRateMs, withPixels = false,
+      fallback)(parse)
+}
+
+/** The frame sampler behind the y4m, AVI, MP4 and Matroska decoders
+  * (reference: preprocess.py:156-189, the JavaCV grab loop in
+  * [[FfmpegFrameDecoder.grabFrames]]): one tick every `sampleRateMs` of
+  * video time, `tsMs = i · sampleRateMs`, stopping at the first tick at
+  * or past the media end; each tick emits the native frame whose interval
+  * covers it, and a frame that covers several ticks is decoded once.
+  * `frame_per_sec` is the emitted cadence ([[FrameDecoder.effectiveFps]])
+  * and `frame_total` the emitted count, as with [[SyntheticFrameDecoder]].
+  * `decodeMeta` runs the same ticks without touching pixels.
+  */
+private[pipeline] object FrameSampler {
+
+  /** Ticks per file, at most. 10M ticks at the default 500 ms is ~58 days
+    * of video, far past any real clip: a header that claims more is
+    * corrupt, and fails typed before anything is allocated instead of
+    * exhausting the heap.
+    */
+  val MaxTicks = 10000000L
+
+  /** The file's bytes: `content` when given, else read from the path. */
+  def bytesOf(filename: String, content: Array[Byte]): Array[Byte] =
+    if (content != null) content
+    else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      filename.stripPrefix("file:")))
+
+  def sample(filename: String, content: Array[Byte], sampleRateMs: Long,
+      withPixels: Boolean, fallback: FrameDecoder)(
+      parse: (String, Array[Byte]) => ParsedVideo): Iterator[DecodedFrame] = {
+    val video = parse(filename, bytesOf(filename, content))
+    if (withPixels && video.pixels.isEmpty)
+      return fallback.decode(filename, content, sampleRateMs)
+    val fps = FrameDecoder.effectiveFps(sampleRateMs)
+    // tick i is inside the video iff i·sampleRateMs·unitsPerSec <
+    // endUnits·1000; exact arithmetic, so no header can wrap the count
+    val step = BigInt(sampleRateMs) * video.unitsPerSec
+    val ticks = (video.endUnits.max(0) * 1000 + step - 1) / step
+    require(ticks <= MaxTicks && ticks * sampleRateMs <= Long.MaxValue,
+      s"$filename: $ticks sample ticks at $sampleRateMs ms exceed the " +
+        s"$MaxTicks-tick bound (media end ${video.endUnits} units at " +
+        s"${video.unitsPerSec}/s)")
+    val total = ticks.toDouble
+    val pixels = video.pixels.filter(_ => withPixels)
+    var cachedIdx = -1L
+    var cached = Array.emptyFloatArray
+    Iterator.range(0, ticks.toInt).map { i =>
+      val tsMs = i * sampleRateMs
+      val idx = video.covering(tsMs)
+      require(idx >= 0 && idx < video.frames, s"$filename: the tick at " +
+        s"$tsMs ms falls on frame $idx of ${video.frames}")
+      pixels.foreach { px =>
+        if (idx != cachedIdx) { cached = px(idx.toInt); cachedIdx = idx }
+      }
+      DecodedFrame(tsMs, fps, total, video.height, video.width, cached)
+    }
+  }
+
+  /** Index of the frame whose [start, next start) interval covers `t`,
+    * given non-decreasing frame start times.
+    */
+  def covering(starts: Array[Long], t: Long): Long = {
+    var lo = 0
+    var hi = starts.length - 1
+    while (lo < hi) {
+      val mid = (lo + hi + 1) >>> 1
+      if (starts(mid) <= t) lo = mid else hi = mid - 1
+    }
+    lo
+  }
+
+  /** One JPEG → interleaved normalized RGB floats via the JVM's own
+    * ImageIO reader (present in every JRE). The offset is file content,
+    * so it is bounds-checked before any read, and the decoded size must
+    * match the container header — a lying header fails loudly rather
+    * than emitting misshapen tensors.
+    */
+  def jpegToRgb(filename: String, b: Array[Byte], off: Long, len: Int,
+      w: Int, h: Int): Array[Float] = {
+    // subtraction form, NOT `off + len <= b.length`: a near-Long.Max
+    // offset would overflow the sum negative and sail through
+    require(off >= 0 && len >= 0 && off <= b.length - len,
+      s"$filename: frame [$off, +$len) overruns the ${b.length}-byte file")
+    val o = off.toInt
+    require(len >= 2 && (b(o) & 0xff) == 0xff && (b(o + 1) & 0xff) == 0xd8,
+      s"$filename: frame at byte $off is not a JPEG")
+    val img = javax.imageio.ImageIO.read(
+      new java.io.ByteArrayInputStream(b, o, len))
+    require(img != null,
+      s"$filename: ImageIO failed to decode the JPEG at byte $off")
+    require(img.getWidth == w && img.getHeight == h,
+      s"$filename: frame is ${img.getWidth}x${img.getHeight} but the " +
+        s"container header says ${w}x$h")
+    val px = new Array[Float](w * h * 3)
+    val row = new Array[Int](w)
+    var p = 0
+    var y = 0
+    while (y < h) {
+      img.getRGB(0, y, w, 1, row, 0, w)
+      var x = 0
+      while (x < w) {
+        val rgb = row(x)
+        px(p) = ((rgb >> 16) & 0xff) / 255.0f
+        px(p + 1) = ((rgb >> 8) & 0xff) / 255.0f
+        px(p + 2) = (rgb & 0xff) / 255.0f
+        p += 3
+        x += 1
+      }
+      y += 1
+    }
+    px
+  }
+}
+
 /** Deterministic fake decoder: frame count, fps, and pixels derive from a
   * hash of the filename, so every run (and every engine re-running a lost
   * partition) produces identical frames. Pixels are normalized [0,1] floats

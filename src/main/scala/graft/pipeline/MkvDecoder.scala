@@ -47,21 +47,12 @@ package graft.pipeline
   * that rewind fail typed — a 100 TB crawl's mkv population includes
   * every mutation, and a lying field must produce a typed error, never
   * a raw AIOOBE, a giant allocation, or silently wrong frames.
+  *
+  * Frame sampling is [[FrameSampler]]'s; this file only parses.
   */
 final class MkvFrameDecoder(
     fallback: FrameDecoder = FfmpegFrameDecoder.orSynthetic())
-    extends FrameDecoder {
-
-  override def decode(filename: String, content: Array[Byte],
-      sampleRateMs: Long): Iterator[DecodedFrame] =
-    MkvFrameDecoder.decode(filename, content, sampleRateMs,
-      withPixels = true, fallback)
-
-  override def decodeMeta(filename: String, content: Array[Byte],
-      sampleRateMs: Long): Iterator[DecodedFrame] =
-    MkvFrameDecoder.decode(filename, content, sampleRateMs,
-      withPixels = false, fallback)
-}
+    extends ContainerFrameDecoder(MkvFrameDecoder.parse, fallback)
 
 object MkvFrameDecoder {
 
@@ -513,19 +504,6 @@ object MkvFrameDecoder {
       th.defaultDurationNs, frames.result(), startArr, durationNs)
   }
 
-  /** Frame index whose [start, next-start) covers `t` ns — binary
-    * search, same shape as the mp4 stts selector.
-    */
-  private def frameAt(starts: Array[Long], t: Long): Int = {
-    var lo = 0
-    var hi = starts.length - 1
-    while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (starts(mid) <= t) lo = mid else hi = mid - 1
-    }
-    lo
-  }
-
   /** One raw I420 frame → RGB floats, via the y4m converter (the frame
     * bytes ARE a C420 y4m frame body). Same fail-typed bounds rule as
     * the JPEG path: offsets are attacker-controlled file content.
@@ -549,60 +527,28 @@ object MkvFrameDecoder {
       Y4MFrameDecoder.Header(w, h, 1L, 1L, "420mpeg2", 0))
   }
 
-  private[pipeline] def decode(filename: String, content: Array[Byte],
-      sampleRateMs: Long, withPixels: Boolean,
-      fallback: FrameDecoder): Iterator[DecodedFrame] = {
-    val bytes =
-      if (content != null) content
-      else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        filename.stripPrefix("file:")))
+  /** Pure-JVM pixel paths: independent JPEGs (V_MJPEG) and raw planar
+    * YUV 4:2:0 (V_UNCOMPRESSED with ColourSpace I420 — the y4m frame body
+    * in a Matroska wrapper). Any other codec has no pixel converter: its
+    * pixels come from the fallback, its metadata from the block
+    * timestamps.
+    */
+  private def parse(filename: String, bytes: Array[Byte]): ParsedVideo = {
     require(sniff(bytes), s"$filename: not an EBML/Matroska stream")
     val track = parseVideoTrack(filename, bytes)
-    // pure-JVM pixel paths: independent JPEGs (V_MJPEG) and raw planar
-    // YUV 4:2:0 (V_UNCOMPRESSED with ColourSpace I420 — the y4m frame
-    // body in a Matroska wrapper; same BT.601 limited-range conversion,
-    // shared with Y4MFrameDecoder so the colorspace math has one home)
+    require(track.samples.nonEmpty, s"$filename: mkv video track is empty")
     val rawI420 = track.codecId == "V_UNCOMPRESSED" &&
       track.colourSpace == "I420"
-    if (withPixels && track.codecId != "V_MJPEG" && !rawI420) {
-      // real codec (V_MPEG4/ISO/AVC, V_VP9, …): PIXELS need the
-      // env-gated seam — never mis-decode, never fabricate here.
-      // METADATA does not: the cluster/block timestamps already served
-      // timestamps, fps and frame_total codec-free above.
-      return fallback.decode(filename, content, sampleRateMs)
-    }
-    require(track.samples.nonEmpty, s"$filename: mkv video track is empty")
-    // totality: a mutated Duration/TimestampScale can claim days of
-    // video; the tick loop must fail typed, not spin (same bound as mp4)
-    require(track.durationNs / 1000000L / math.max(sampleRateMs, 1L)
-        <= 10000000L,
-      s"$filename: absurd mkv duration ${track.durationNs} ns")
-    val fps = FrameDecoder.effectiveFps(sampleRateMs)
-    val emitted = Iterator.from(0)
-      .map(i => i.toLong * sampleRateMs)
-      .takeWhile(_ * 1000000L < track.durationNs)
-      .map(tsMs => (tsMs, frameAt(track.starts, tsMs * 1000000L)))
-      .toArray
-    val total = emitted.length.toDouble
-    var cachedIdx = -1
-    var cached: Array[Float] = null
-    emitted.iterator.map { case (tsMs, idx) =>
-      val image =
-        if (!withPixels) Array.emptyFloatArray
-        else {
-          if (idx != cachedIdx) {
-            val (off, len) = track.samples(idx)
-            cached =
-              if (rawI420) i420ToRgb(filename, bytes, off, len,
-                track.w, track.h)
-              else Mp4FrameDecoder.jpegToRgb(filename, bytes, off, len,
-                track.w, track.h)
-            cachedIdx = idx
-          }
-          cached
-        }
-      DecodedFrame(tsMs, fps, total, track.h, track.w, image)
-    }
+    ParsedVideo(track.h, track.w, track.samples.length,
+      BigInt(track.durationNs), 1000000000L,
+      tsMs => FrameSampler.covering(track.starts, tsMs * 1000000L),
+      if (track.codecId != "V_MJPEG" && !rawI420) None
+      else Some { i =>
+        val (off, len) = track.samples(i)
+        if (rawI420) i420ToRgb(filename, bytes, off, len, track.w, track.h)
+        else FrameSampler.jpegToRgb(filename, bytes, off, len, track.w,
+          track.h)
+      })
   }
 
   // ---- fixture-writer companion (tests, debug clips) ----------------------

@@ -256,14 +256,9 @@ object PngCodec {
   */
 final class PngFrameDecoder extends FrameDecoder {
 
-  private def bytesOf(filename: String, content: Array[Byte]): Array[Byte] =
-    if (content != null) content
-    else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      filename.stripPrefix("file:")))
-
   override def decode(filename: String, content: Array[Byte],
       sampleRateMs: Long): Iterator[DecodedFrame] = {
-    val (w, h, rgb) = PngCodec.decode(bytesOf(filename, content))
+    val (w, h, rgb) = PngCodec.decode(FrameSampler.bytesOf(filename, content))
     val px = new Array[Float](w * h * 3)
     var i = 0
     while (i < rgb.length) {
@@ -279,7 +274,8 @@ final class PngFrameDecoder extends FrameDecoder {
 
   override def decodeMeta(filename: String, content: Array[Byte],
       sampleRateMs: Long): Iterator[DecodedFrame] = {
-    val (w, h) = PngCodec.dimensions(bytesOf(filename, content))
+    val (w, h) = PngCodec.dimensions(
+      FrameSampler.bytesOf(filename, content))
     Iterator.single(DecodedFrame(0L,
       FrameDecoder.effectiveFps(sampleRateMs), 1.0, h, w,
       Array.emptyFloatArray))

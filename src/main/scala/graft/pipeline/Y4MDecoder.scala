@@ -17,22 +17,10 @@ package graft.pipeline
   * only affect interpolating upsamplers; this decoder uses the co-sited
   * nearest sample), C420jpeg (full-range), C422, C444, and Cmono.
   *
-  * Frame sampling mirrors [[FfmpegFrameDecoder.grabFrames]]: one tick per
-  * `sampleRateMs` of video time, each tick emitting the frame whose
-  * native interval covers it; `frame_per_sec` is the emitted cadence
-  * ([[FrameDecoder.effectiveFps]]), `frame_total` the emitted count, as
-  * with [[SyntheticFrameDecoder]].
+  * Frame sampling is [[FrameSampler]]'s; this file only parses.
   */
-final class Y4MFrameDecoder extends FrameDecoder {
-
-  override def decode(filename: String, content: Array[Byte],
-      sampleRateMs: Long): Iterator[DecodedFrame] =
-    Y4MFrameDecoder.decode(filename, content, sampleRateMs, withPixels = true)
-
-  override def decodeMeta(filename: String, content: Array[Byte],
-      sampleRateMs: Long): Iterator[DecodedFrame] =
-    Y4MFrameDecoder.decode(filename, content, sampleRateMs, withPixels = false)
-}
+final class Y4MFrameDecoder
+    extends ContainerFrameDecoder(Y4MFrameDecoder.parse)
 
 object Y4MFrameDecoder {
 
@@ -173,29 +161,16 @@ object Y4MFrameDecoder {
     px
   }
 
-  private[pipeline] def decode(filename: String, content: Array[Byte],
-      sampleRateMs: Long, withPixels: Boolean): Iterator[DecodedFrame] = {
-    val bytes =
-      if (content != null) content
-      else java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        filename.stripPrefix("file:")))
+  /** Frame i spans [i, i+1) · fpsDen/fpsNum s, so the frame covering
+    * tick time t ms is floor(t · fpsNum / (1000 · fpsDen)).
+    */
+  private def parse(filename: String, bytes: Array[Byte]): ParsedVideo = {
     val hdr = parseHeader(filename, bytes)
     val offsets = frameOffsets(filename, bytes, hdr)
-    val fps = FrameDecoder.effectiveFps(sampleRateMs)
-    // tick every sampleRateMs of video time; the covering native frame is
-    // floor(t · fpsNum / (1000 · fpsDen)); ticks past the last frame end
-    val emitted = Iterator.from(0)
-      .map(i => (i.toLong * sampleRateMs,
-        i.toLong * sampleRateMs * hdr.fpsNum / (1000L * hdr.fpsDen)))
-      .takeWhile { case (_, idx) => idx < offsets.length }
-      .toArray
-    val total = emitted.length.toDouble
-    emitted.iterator.map { case (tsMs, idx) =>
-      val image =
-        if (withPixels) toRgb(bytes, offsets(idx.toInt), hdr)
-        else Array.emptyFloatArray
-      DecodedFrame(tsMs, fps, total, hdr.h, hdr.w, image)
-    }
+    ParsedVideo(hdr.h, hdr.w, offsets.length,
+      BigInt(offsets.length) * hdr.fpsDen, hdr.fpsNum,
+      tsMs => tsMs * hdr.fpsNum / (1000L * hdr.fpsDen),
+      Some(i => toRgb(bytes, offsets(i), hdr)))
   }
 
   /** Minimal y4m writer — the test-fixture companion (also handy for

@@ -1074,7 +1074,7 @@ object Dedup {
     Q("dd_clusters",
       (s, dir) => graft.ops.Components.label(
         TextOps.lshCandidates(docs(s, dir), ShingleN, K, RowsPerBand),
-        rounds = 4, materializeResult = false), // consumed once (r19)
+        rounds = 4),
       Some(s"""
         WITH bands AS (${DocSql.bandsSql(ShingleN, K, RowsPerBand)}),
         cand AS (
@@ -1650,7 +1650,7 @@ object Dedup {
         val Seq(pairs, s2m) = graft.ops.Materialize.materializeAll(
           TextOps.lshCandidates(d, ShingleN, K, RowsPerBand), s2)
         val labels = graft.ops.Components.label(pairs, rounds = 4,
-          inputMaterialized = true, materializeResult = false)
+          inputMaterialized = true)
         val wCl = Window.partitionBy(col("cluster_id"))
         val s3 = s2m.join(broadcast(labels), Seq("doc_id"), "left")
           .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
@@ -2039,7 +2039,7 @@ object Dedup {
       (s, dir) => {
         val labeled = graft.ops.Components.label(
           TextOps.lshCandidates(docs(s, dir), ShingleN, K, RowsPerBand),
-          rounds = 4, materializeResult = false)
+          rounds = 4)
           .materialize() // the caller's barrier IS the reuse point (r19)
         val hist = labeled.groupBy(col("cluster_id"))
           .agg(count(lit(1)).as("cluster_size"))

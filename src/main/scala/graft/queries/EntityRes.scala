@@ -481,6 +481,7 @@ object EntityRes {
         val matched = scoredPairs(s, dir).filter(col("is_match") === 1)
           .select(col("rec_a").as("doc_a"), col("rec_b").as("doc_b"))
         val labeled = graft.ops.Components.label(matched, rounds = 3)
+          .materialize() // read twice: the size aggregate and the join
           .select(col("doc_id").as("rec_id"), col("cluster_id")
             .as("entity_id"))
         val sizes = labeled.groupBy(col("entity_id"))
@@ -515,8 +516,7 @@ object EntityRes {
       (s, dir) => {
         val matched = scoredPairs(s, dir).filter(col("is_match") === 1)
           .select(col("rec_a").as("doc_a"), col("rec_b").as("doc_b"))
-        val labeled = graft.ops.Components.label(matched, rounds = 3,
-            materializeResult = false) // consumed once (r19)
+        val labeled = graft.ops.Components.label(matched, rounds = 3)
           .select(col("doc_id").as("rec_id"), col("cluster_id")
             .as("entity_id"))
         val recs = records(s, dir)
@@ -588,9 +588,8 @@ object EntityRes {
             sp.filter(col("is_match") === 1)
               .select(col("rec_a").as("doc_a"), col("rec_b").as("doc_b")),
             rounds = 3,
-            // input = a filter over the sp checkpoint, labels consumed
-            // once — both barrier skips apply (r19)
-            inputMaterialized = true, materializeResult = false)
+            // input = a filter over the sp checkpoint (r19)
+            inputMaterialized = true)
           .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
           .agg(count(lit(1)).as("n_entities_multi"),
             sum(col("sz")).as("n_linked_records"),
@@ -648,9 +647,8 @@ object EntityRes {
             sp.filter(col("is_match") === 1)
               .select(col("rec_a").as("doc_a"), col("rec_b").as("doc_b")),
             rounds = 3,
-            // input = a filter over the sp checkpoint, labels consumed
-            // once — both barrier skips apply (r19)
-            inputMaterialized = true, materializeResult = false)
+            // input = a filter over the sp checkpoint (r19)
+            inputMaterialized = true)
           .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
           .agg(count(lit(1)).as("n_entities_multi"),
             sum(col("sz")).as("n_linked_records"),
@@ -716,9 +714,8 @@ object EntityRes {
             sp.filter(col("is_match") === 1)
               .select(col("rec_a").as("doc_a"), col("rec_b").as("doc_b")),
             rounds = 3,
-            // input = a filter over the sp checkpoint, labels consumed
-            // once — both barrier skips apply (r19)
-            inputMaterialized = true, materializeResult = false)
+            // input = a filter over the sp checkpoint (r19)
+            inputMaterialized = true)
           .groupBy(col("cluster_id")).agg(count(lit(1)).as("sz"))
           .agg(count(lit(1)).as("n_entities_multi"),
             sum(col("sz")).as("n_linked_records"),

@@ -195,8 +195,7 @@ object MultimodalQ {
       (s, dir) => {
         val pairs = dhashPairs(s, dir)
           .select(col("asset_a").as("doc_a"), col("asset_b").as("doc_b"))
-        graft.ops.Components.label(pairs, rounds = 2,
-            materializeResult = false) // consumed once (r19)
+        graft.ops.Components.label(pairs, rounds = 2)
           .groupBy(col("cluster_id"))
           .agg(count(lit(1)).as("n_members"),
             max(col("doc_id")).as("keep_id"))
@@ -788,8 +787,7 @@ object MultimodalQ {
       (s, dir) => {
         val pairs = audioPairs(s, dir)
           .select(col("rec_a").as("doc_a"), col("rec_b").as("doc_b"))
-        graft.ops.Components.label(pairs, rounds = 2,
-            materializeResult = false) // consumed once (r19)
+        graft.ops.Components.label(pairs, rounds = 2)
           .groupBy(col("cluster_id"))
           .agg(count(lit(1)).as("n_members"),
             max(col("doc_id")).as("keep_id"))
@@ -858,8 +856,7 @@ object MultimodalQ {
       (s, dir) => {
         val pairs = videoNearDup(s, Tables.sharded(s, dir, "documents"))
           .select(col("rec_a").as("doc_a"), col("rec_b").as("doc_b"))
-        graft.ops.Components.label(pairs, rounds = 2,
-            materializeResult = false) // consumed once (r19)
+        graft.ops.Components.label(pairs, rounds = 2)
           .groupBy(col("cluster_id"))
           .agg(count(lit(1)).as("n_members"),
             max(col("doc_id")).as("keep_id"))

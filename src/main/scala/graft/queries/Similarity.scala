@@ -850,10 +850,11 @@ object Similarity {
           .filter(VectorOps.cosine(d(col("qa"), col("qb")),
             col("na"), col("nb")) >= tau)
           .select(col("doc_a"), col("doc_b"))
-        // materializeResult stays TRUE here: the labels feed a JOIN, and
-        // without the checkpoint's known size the planner degraded the
-        // join strategy (A/B: 1.65 -> 1.85 s with the skip — reverted)
+        // the labels are checkpointed: they feed a JOIN, and without the
+        // checkpoint's known size the planner degraded the join strategy
+        // (A/B: 1.65 -> 1.85 s without it)
         val members = graft.ops.Components.label(edges, rounds = 2)
+          .materialize()
           .join(assigned.select(col("vec_id").as("doc_id"), col("ccos")),
             "doc_id")
         val w = Window.partitionBy(col("cluster_id"))

@@ -124,6 +124,40 @@ class ContainerFuzzSpec extends AnyFunSuite {
     fuzz("y4m", good)(b => dec.decode("f.y4m", b, 500).foreach(_ => ()))
   }
 
+  test("a header that claims months of video fails typed at the tick " +
+      "bound, on decode and decodeMeta alike, not at heap death") {
+    val frame = Array.fill[Byte](6)(100.toByte)
+    val jpeg = AviMjpegFrameDecoder.encodeJpeg(Array.fill(4 * 4 * 3)(0.5f),
+      4, 4)
+    val days100 = 86400L * 100 // one frame lasting 100 days
+    val cases = Seq(
+      // 1000 · 0xFFFFFFFF ms of video: 8.6e9 ticks at 500 ms
+      ("y4m F1:4294967295", new Y4MFrameDecoder(),
+        Y4MFrameDecoder.write(2, 2, 1, 0xffffffffL, "420mpeg2", Seq(frame))),
+      // 1000L · fpsDen overflows a Long
+      ("y4m F1:9223372036854775807", new Y4MFrameDecoder(),
+        Y4MFrameDecoder.write(2, 2, 1, Long.MaxValue, "420mpeg2",
+          Seq(frame))),
+      ("AVI dwRate=1 dwScale=0xFFFFFFFF", new AviMjpegFrameDecoder(),
+        AviMjpegFrameDecoder.write(4, 4, 1, 0xffffffffL, Seq(jpeg))),
+      ("MP4 stts delta of 100 days",
+        new Mp4FrameDecoder(new SyntheticFrameDecoder()),
+        Mp4FrameDecoder.write(4, 4, 1, days100, Seq(jpeg))),
+      ("Matroska Duration of 100 days",
+        new MkvFrameDecoder(new SyntheticFrameDecoder()),
+        MkvFrameDecoder.write(4, 4, 1, days100, Seq(jpeg))))
+    for ((name, dec, bytes) <- cases; meta <- Seq(false, true)) {
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalArgumentException] {
+        (if (meta) dec.decodeMeta("t", bytes, 500)
+         else dec.decode("t", bytes, 500)).foreach(_ => ())
+      }
+      val seconds = (System.nanoTime() - t0) / 1e9
+      assert(seconds < 5.0, s"$name (meta = $meta) took $seconds s")
+      assert(e.getMessage.contains("tick bound"), s"$name: ${e.getMessage}")
+    }
+  }
+
   test("PNG: mutations and truncations are total; a valid-CRC gigapixel " +
       "IHDR fails typed at the pixel bound, not at a multi-GiB alloc") {
     val px = Array.tabulate(6 * 5)(i => (i * 41 % 256) * 65793)
